@@ -45,16 +45,20 @@ object Ingest {
       col(Schemas.UserCol), col(Schemas.ProductCol), col(Schemas.RatingCol))
 
   /** Full ETL: CSV → store.{ratings, validation}
-    * (≙ populateTables, Driver.java:86-92). Returns (train, validation)
-    * analytic frames for immediate reuse without a store round-trip. */
-  def populate(spark: SparkSession, store: TableStore, csvPath: String): (DataFrame, DataFrame) = {
+    * (≙ populateTables, Driver.java:86-92). The parsed CSV is cached only
+    * for the two appends and released after them: Spark's CacheManager
+    * matches any later read of the same path to a live cache entry, so a
+    * cache kept past this call would serve a CSV rewritten in place from
+    * its OLD rows on the next populate. */
+  def populate(spark: SparkSession, store: TableStore, csvPath: String): Unit = {
     val parsed = parseCsv(spark, csvPath).cache()
-    val train = selectSet(parsed, Schemas.TrainTag)
-    val valid = selectSet(parsed, Schemas.ValidationTag)
-    store.create(Schemas.RatingsTable, Schemas.storedRatingSchema)
-    store.create(Schemas.ValidationTable, Schemas.storedRatingSchema)
-    store.append(Schemas.RatingsTable, withRowId(train))
-    store.append(Schemas.ValidationTable, withRowId(valid))
-    (train, valid)
+    try {
+      store.create(Schemas.RatingsTable, Schemas.storedRatingSchema)
+      store.create(Schemas.ValidationTable, Schemas.storedRatingSchema)
+      store.append(Schemas.RatingsTable,
+        withRowId(selectSet(parsed, Schemas.TrainTag)))
+      store.append(Schemas.ValidationTable,
+        withRowId(selectSet(parsed, Schemas.ValidationTag)))
+    } finally parsed.unpersist()
   }
 }

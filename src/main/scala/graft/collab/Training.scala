@@ -33,6 +33,9 @@ object Training {
   def save(model: ALSModel, path: String): Unit =
     model.write.overwrite().save(path)
 
+  /** A loaded model is a new instance: [[Scoring.predict]] pins its factor
+    * tables on its first call and reuses the pin for every later call on
+    * the same instance, so load once and score many batches with it. */
   def load(path: String): ALSModel = ALSModel.load(path)
 
   def train(
@@ -46,10 +49,13 @@ object Training {
     // checkpoint dir exists; without it the 2×maxIter-stage lineage can
     // overflow the stack at task-serialization time (observed at iter=20
     // under memory pressure). At cluster scale this is mandatory anyway.
+    // The fallback dir lives in java.io.tmpdir and goes at JVM exit.
     val sc = ratings.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    if (sc.getCheckpointDir.isEmpty) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+      sc.setCheckpointDir(dir.toString)
+    }
     new ALS()
       .setUserCol(Schemas.UserCol)
       .setItemCol(Schemas.ProductCol)

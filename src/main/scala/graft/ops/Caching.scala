@@ -132,7 +132,7 @@ object Caching {
       java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
 
   /** The session's auto-broadcast threshold in bytes (0 when disabled). */
-  private def broadcastThreshold(
+  private[graft] def broadcastThreshold(
       s: org.apache.spark.sql.SparkSession): Long = {
     val v = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     if (v.trim.startsWith("-")) 0L

@@ -144,9 +144,11 @@ object CollabEvents {
     * codegen plan (two equi-joins — item factors broadcast-small — and a
     * fused dot loop), not a Scala-UDF epilogue; and the strict double
     * left-fold makes the prediction exactly replayable by the DuckDB
-    * oracle's left-associated term chain, which ALS's float sdot (BLAS-
-    * backend-dependent accumulation) is not. The float→double factor cast
-    * is exact, so this IS the saved model's score up to summation
+    * oracle's left-associated chain of double terms. ALS's own predict
+    * (and [[graft.collab.Scoring]], which reproduces it) is a plain
+    * in-order loop with a FLOAT accumulator, so it rounds every partial
+    * sum to float and no double chain replays it. The float→double factor
+    * cast is exact, so this IS the saved model's score up to summation
     * precision; round-trip bit-exactness of the factors themselves is
     * spec-asserted in OpsSpec. Fully oracled (cf_als_score_saved). */
   def alsScoreFromSaved(s: SparkSession, dir: String): DataFrame = {

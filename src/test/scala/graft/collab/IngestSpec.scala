@@ -40,6 +40,22 @@ class IngestSpec extends SparkSpec {
     assert(ex.getMessage != null)
   }
 
+  test("populate re-reads a CSV rewritten in place (no stale cached rows)") {
+    val dir = java.nio.file.Files.createTempDirectory("ingest-stale")
+    try {
+      val csvPath = dir.resolve("ratings.csv")
+      val store = new ParquetTableStore(spark, dir.resolve("store").toString)
+      java.nio.file.Files.writeString(csvPath, "I,1,1,4.0\nI,2,1,5.0\nV,1,2,1.0\n")
+      Ingest.populate(spark, store, csvPath.toString)
+      assert(store.scan(Schemas.RatingsTable).count() === 2)
+      java.nio.file.Files.writeString(csvPath,
+        "I,1,1,4.0\nI,2,1,5.0\nI,3,1,2.0\nI,4,2,1.0\nV,1,2,1.0\n")
+      Ingest.populate(spark, store, csvPath.toString)
+      assert(store.scan(Schemas.RatingsTable).count() === 4)
+      assert(store.scan(Schemas.ValidationTable).count() === 1)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("withRowId attaches a unique uuid id column") {
     val parsed = Ingest.parseCsv(spark, csv)
     val withId = Ingest.withRowId(Ingest.selectSet(parsed, "I"))

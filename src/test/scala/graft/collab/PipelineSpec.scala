@@ -1,6 +1,7 @@
 package graft.collab
 
 import graft.SparkSpec
+import org.apache.commons.io.FileUtils
 
 /** End-to-end parity gate, mirroring the reference's only test
   * (ref: CollabFilterTest.java:23-39): full pipeline on the reference's
@@ -16,31 +17,36 @@ class PipelineSpec extends SparkSpec {
       .select(Schemas.UserCol, Schemas.ProductCol)
 
     val model = Training.train(train, maxIter = 5)
-    val dir = java.nio.file.Files.createTempDirectory("als-model").toString
-    Training.save(model, dir)
-    val reloaded = Training.load(dir)
+    val dir = java.nio.file.Files.createTempDirectory("als-model")
+    try {
+      Training.save(model, dir.toString)
+      val reloaded = Training.load(dir.toString)
 
-    def preds(m: org.apache.spark.ml.recommendation.ALSModel) =
-      Scoring.predict(m, valid).orderBy(Schemas.UserCol, Schemas.ProductCol)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-    assert(preds(model).toSeq === preds(reloaded).toSeq)
+      def preds(m: org.apache.spark.ml.recommendation.ALSModel) =
+        Scoring.predict(m, valid).orderBy(Schemas.UserCol, Schemas.ProductCol)
+          .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+      assert(preds(model).toSeq === preds(reloaded).toSeq)
+    } finally FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("e2e: populate -> train -> predict -> validate -> report, RMSE in [0, 0.5)") {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    val result = Pipeline.run(spark, new ParquetTableStore(spark, warehouse), csv)
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh")
+    try {
+      val result = Pipeline.run(spark,
+        new ParquetTableStore(spark, warehouse.toString), csv)
 
-    assert(result.rmse >= 0.0, "RMSE must be non-negative")
-    assert(result.rmse < 0.5, s"Excess root mean square error: ${result.rmse}")
+      assert(result.rmse >= 0.0, "RMSE must be non-negative")
+      assert(result.rmse < 0.5, s"Excess root mean square error: ${result.rmse}")
 
-    val lines = result.report.split("\n")
-    assert(lines.head === Report.Header)
-    assert(lines.length === 11, "9 validation rows + header + RMSE footer")
-    assert(lines.last.startsWith("RMSE = "))
+      val lines = result.report.split("\n")
+      assert(lines.head === Report.Header)
+      assert(lines.length === 11, "9 validation rows + header + RMSE footer")
+      assert(lines.last.startsWith("RMSE = "))
 
-    // store round-trip happened: both tables populated
-    val store = new ParquetTableStore(spark, warehouse)
-    assert(store.scan(Schemas.RatingsTable).count() === 111)
-    assert(store.scan(Schemas.ValidationTable).count() === 9)
+      // store round-trip happened: both tables populated
+      val store = new ParquetTableStore(spark, warehouse.toString)
+      assert(store.scan(Schemas.RatingsTable).count() === 111)
+      assert(store.scan(Schemas.ValidationTable).count() === 9)
+    } finally FileUtils.deleteDirectory(warehouse.toFile)
   }
 }
